@@ -547,10 +547,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors())
-    val passes = sys.env.get("SPARK_GRAFT_BENCH_PASSES")
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption).filter(_ >= 1).getOrElse(3)
+    val cpus = GraftSession.defaultCores
+    val passes = GraftSession.envPositiveInt("SPARK_GRAFT_BENCH_PASSES").getOrElse(3)
     val spark = GraftSession.builder("graft-bench", cores = cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // round-12 verdict #2: the executors' own clock per entry — the

@@ -37,8 +37,18 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
 
   def defaultCores: Int =
-    sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    envPositiveInt("SPARK_GRAFT_CPUS")
       .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  /** A positive-int knob: `None` when unset; any other value that is
+    * not a positive integer (surrounding blanks allowed) fails fast
+    * with an error naming the knob, instead of falling back silently
+    * or surfacing as a bare `NumberFormatException`. */
+  def positiveInt(name: String, raw: Option[String]): Option[Int] =
+    raw.map(v => v.trim.toIntOption.filter(_ >= 1).getOrElse(
+      throw new IllegalArgumentException(s"$name='$v' is not a positive int")))
+
+  def envPositiveInt(name: String): Option[Int] = positiveInt(name, sys.env.get(name))
 
   def getOrCreate(appName: String = "graft"): SparkSession = {
     val s = builder(appName).getOrCreate()

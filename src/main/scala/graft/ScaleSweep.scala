@@ -247,12 +247,8 @@ object ScaleSweep {
       .split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val ops = args.headOption.map(_.split(",").map(_.trim).toSeq)
       .getOrElse(DefaultOps)
-    val passes = sys.env.get("SPARK_GRAFT_SWEEP_PASSES")
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption)
-      .filter(_ >= 1).getOrElse(2)
-    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
-      .getOrElse(Runtime.getRuntime.availableProcessors())
-    val spark = GraftSession.builder("graft-sweep", cores = cpus).getOrCreate()
+    val passes = GraftSession.envPositiveInt("SPARK_GRAFT_SWEEP_PASSES").getOrElse(2)
+    val spark = GraftSession.builder("graft-sweep").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // missing rungs materialize from the rung below them (idempotent):

@@ -99,16 +99,7 @@ object StreamOps {
       .map(p => p.stateOperators.map(_.numRowsTotal).sum)
     statePeaks.put(family, totals.foldLeft(0L)(math.max))
     stateFinals.put(family, totals.lastOption.getOrElse(0L))
-    progressLog.put(family, q.recentProgress.toSeq.map(_.json))
   }
-
-  /** Full progress JSON of the family's last run (micro-batch count +
-    * durationMs breakdown) — diagnostic surface for [[graft.StreamProf]];
-    * costs one map put per run, nothing on the micro-batch path. */
-  private val progressLog =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[String]]()
-  def lastProgress(family: String): Seq[String] =
-    Option(progressLog.get(family)).getOrElse(Seq.empty)
 
   /** Streaming source over the events parquet (file source — the
     * offline stand-in for the Kafka source; same DataFrame downstream). */
@@ -136,20 +127,10 @@ object StreamOps {
     * cores, so no store outgrows executor memory) — hence the env
     * override, the deployment-side state-layer knob, deliberately
     * decoupled from the batch shuffle width. */
-  private val envStateParts: Option[Int] = {
-    val raw = sys.env.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
-    val parsed = raw
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption).filter(_ >= 1)
-    // round-15 ADVICE: a typo'd deployment override used to be
-    // silently dropped in favour of the default — fail fast instead
-    // (a wrong state-store count is frozen into every checkpoint the
-    // deployment writes, the worst place for a silent fallback)
-    raw.foreach { v =>
-      if (parsed.isEmpty) throw new IllegalArgumentException(
-        s"SPARK_GRAFT_STREAM_STATE_PARTITIONS='$v' is not a positive int")
-    }
-    parsed
-  }
+  // fails fast on a typo: a wrong state-store count is frozen into
+  // every checkpoint the deployment writes
+  private val envStateParts: Option[Int] =
+    graft.GraftSession.envPositiveInt("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
 
   val StreamStatePartitions: Int = envStateParts.getOrElse(4)
 
@@ -166,22 +147,6 @@ object StreamOps {
     * wins everywhere — one deployment knob, per-family defaults. */
   private[streaming] val WideStatePartitions: Int = envStateParts.getOrElse(8)
 
-  /** Run `body` — which must BUILD, START and DRAIN its streaming
-    * query on the session it receives — against a FORKED session
-    * (`newSession()`: own SQL conf and temp catalog, shared
-    * SparkContext and cached data) whose `spark.sql.shuffle
-    * .partitions` is set to [[StreamStatePartitions]]. The partition
-    * count is captured by the streaming query at start and sizes its
-    * state stores; forking confines the setting to this one query —
-    * the previous shape mutated the CALLER's session conf for the
-    * scope's duration (ConfScope), which the round-6 verdict flagged:
-    * a concurrent batch query on the same session would silently
-    * shuffle at the narrowed width. The memory-sink table registers
-    * in the fork's temp catalog, so `body` must also READ it from the
-    * fork and return the result.
-    *
-    * The fork also pins the run's CHECKPOINT placement: see
-    * [[CkptBase]] below. */
   /** Base directory for the ephemeral per-run streaming checkpoints.
     *
     * Spark's auto-created "temporary" checkpoint lands under
@@ -206,6 +171,22 @@ object StreamOps {
         else None
       }
 
+  /** Run `body` — which must BUILD, START and DRAIN its streaming
+    * query on the session it receives — against a FORKED session
+    * (`newSession()`: own SQL conf and temp catalog, shared
+    * SparkContext and cached data) whose `spark.sql.shuffle
+    * .partitions` is set to [[StreamStatePartitions]]. The partition
+    * count is captured by the streaming query at start and sizes its
+    * state stores; forking confines the setting to this one query —
+    * the previous shape mutated the CALLER's session conf for the
+    * scope's duration (ConfScope), which the round-6 verdict flagged:
+    * a concurrent batch query on the same session would silently
+    * shuffle at the narrowed width. The memory-sink table registers
+    * in the fork's temp catalog, so `body` must also READ it from the
+    * fork and return the result.
+    *
+    * The fork also pins the run's CHECKPOINT placement: see
+    * [[CkptBase]]. */
   private def withStreamShuffle[T](s: SparkSession,
       parts: Int = StreamStatePartitions)(body: SparkSession => T): T = {
     val fs = s.newSession()
@@ -229,8 +210,7 @@ object StreamOps {
     // gate-SF oracle runs stay on the default provider: results are
     // provider-independent, only the state backend changes.
     if (sys.env.get("SPARK_GRAFT_STATESTORE").exists(_.equalsIgnoreCase("rocksdb"))) {
-      fs.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      fs.conf.set(ProviderClassConf, RocksDbProvider)
       // Changelog checkpointing (round-13 verdict #5): per-batch the
       // checkpoint uploads only the CHANGELOG (the batch's puts/
       // deletes) instead of a full RocksDB snapshot — the production
@@ -248,6 +228,29 @@ object StreamOps {
     finally ckpt.foreach(d =>
       graft.operators.PlanCache.deleteRecursively(d))
   }
+
+  private val ProviderClassConf = "spark.sql.streaming.stateStore.providerClass"
+  private val RocksDbProvider =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** The reference consumer's "consume up to the target, then stop"
+    * loop: build `plan` on the forked session [[withStreamShuffle]]
+    * hands it, drain it into a memory sink with `Trigger.AvailableNow`,
+    * record the state telemetry and return the sink table (registered
+    * in the fork's catalog). `family` is the SparkEntry key: it prefixes
+    * the nanoTime-unique query name and keys [[lastStatePeak]]. Per-query
+    * conf (e.g. the state-store provider) is set on the fork inside
+    * `plan`, before the query starts. */
+  private[graft] def drainToMemory(s: SparkSession, family: String, mode: String,
+      parts: Int = StreamStatePartitions)(plan: SparkSession => DataFrame): DataFrame =
+    withStreamShuffle(s, parts) { fs =>
+      val name = s"${family}_${System.nanoTime()}"
+      val q = plan(fs).writeStream.queryName(name).format("memory")
+        .outputMode(mode).trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      recordStatePeak(family, q)
+      fs.table(name)
+    }
 
   /** `SPARK_GRAFT_ROCKSDB_CHANGELOG=true` beside the existing
     * `SPARK_GRAFT_STATESTORE=rocksdb` surface (README "Streaming state
@@ -275,32 +278,19 @@ object StreamOps {
     * output mode: every window is emitted on the final trigger, so the
     * result equals the batch aggregation — watermark/append late-data
     * semantics are exercised separately in [[sq1Append]]. */
-  def sq1StreamTumbling(s: SparkSession, dir: String): DataFrame = {
-    val name = s"sq1_${System.nanoTime()}"
-    withStreamShuffle(s) { fs =>
-      val q = sq1Plan(eventsStream(fs, dir))
-        .writeStream.queryName(name).format("memory")
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      recordStatePeak("sq1_stream_tumbling", q)
-      fs.table(name).orderBy("janela_ms", "event_type")
-    }
-  }
+  def sq1StreamTumbling(s: SparkSession, dir: String): DataFrame =
+    drainToMemory(s, "sq1_stream_tumbling", "complete") { fs =>
+      sq1Plan(eventsStream(fs, dir))
+    }.orderBy("janela_ms", "event_type")
 
   /** SQ1 with a watermark in append mode: only windows the watermark
     * has passed are emitted — the late-data-discipline variant. On a
     * bounded input the final (max-ts) window stays open and is withheld:
     * asserted in StreamOpsSpec, not oracle-compared. */
-  def sq1Append(s: SparkSession, dir: String, delay: String = "1 hour"): DataFrame = {
-    val name = s"sq1a_${System.nanoTime()}"
-    withStreamShuffle(s) { fs =>
-      val q = sq1Plan(eventsStream(fs, dir).withWatermark("ts", delay))
-        .writeStream.queryName(name).format("memory")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      fs.table(name).orderBy("janela_ms", "event_type")
-    }
-  }
+  def sq1Append(s: SparkSession, dir: String, delay: String = "1 hour"): DataFrame =
+    drainToMemory(s, "sq1_append", "append") { fs =>
+      sq1Plan(eventsStream(fs, dir).withWatermark("ts", delay))
+    }.orderBy("janela_ms", "event_type")
 
   /** SQ4: SLIDING-window streaming aggregation — 1-hour windows every
     * 30 minutes (each event lands in exactly two overlapping windows),
@@ -319,17 +309,10 @@ object StreamOps {
       .select(unix_millis(col("janela_w.start")).as("janela_ms"), col("event_type"), col("n"),
         col("soma_valor"))
 
-  def sq4StreamSliding(s: SparkSession, dir: String): DataFrame = {
-    val name = s"sq4_${System.nanoTime()}"
-    withStreamShuffle(s) { fs =>
-      val q = sq4Plan(eventsStream(fs, dir))
-        .writeStream.queryName(name).format("memory")
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      recordStatePeak("sq4_stream_sliding", q)
-      fs.table(name).orderBy("janela_ms", "event_type")
-    }
-  }
+  def sq4StreamSliding(s: SparkSession, dir: String): DataFrame =
+    drainToMemory(s, "sq4_stream_sliding", "complete") { fs =>
+      sq4Plan(eventsStream(fs, dir))
+    }.orderBy("janela_ms", "event_type")
 
   /** SQ4's DuckDB oracle: per event, the two epoch-aligned 30-minute
     * slide starts whose 1-hour window covers it (exact micros
@@ -356,23 +339,16 @@ object StreamOps {
     * row per (segment, event_type)). Arrival order cannot affect a
     * complete-mode aggregate over an inner equi-join, so the batch
     * join+aggregate is the oracle. */
-  def sq5StreamEnrich(s: SparkSession, dir: String): DataFrame = {
-    val name = s"sq5_${System.nanoTime()}"
-    withStreamShuffle(s) { fs =>
+  def sq5StreamEnrich(s: SparkSession, dir: String): DataFrame =
+    drainToMemory(s, "sq5_stream_enrich", "complete") { fs =>
       val cust = fs.read.parquet(s"$dir/customer.parquet")
         .select(col("c_custkey"), col("c_mktsegment"))
-      val q = eventsStream(fs, dir)
+      eventsStream(fs, dir)
         .join(broadcast(cust), col("user_id") === col("c_custkey"))
         .groupBy("c_mktsegment", "event_type")
         .agg(count(lit(1)).as("n"),
           sum(col("value").cast(DecimalType(18, 2))).cast("double").as("soma_valor"))
-        .writeStream.queryName(name).format("memory")
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      recordStatePeak("sq5_stream_enrich", q)
-      fs.table(name).orderBy("c_mktsegment", "event_type")
-    }
-  }
+    }.orderBy("c_mktsegment", "event_type")
 
   /** SQ5's DuckDB oracle: the identical batch join + aggregation. */
   val sq5Sql: String =
@@ -393,10 +369,9 @@ object StreamOps {
     * spec can pin streamed == batch sketch equivalence (register
     * max-merge across micro-batches is exact, so the streamed estimate
     * must equal the batch one bit-for-bit). */
-  private[graft] def sq8Streamed(s: SparkSession, dir: String): DataFrame = {
-    val name = s"sq8_${System.nanoTime()}"
-    withStreamShuffle(s, WideStatePartitions) { fs =>
-      val q = eventsStream(fs, dir)
+  private[graft] def sq8Streamed(s: SparkSession, dir: String): DataFrame =
+    drainToMemory(s, "sq8_stream_sketch", "complete", WideStatePartitions) { fs =>
+      eventsStream(fs, dir)
         .groupBy(window(col("ts"), "1 hour").as("janela_w"))
         // rsd 1%: the q52 calibration — the pinned 5% bound is ~5σ, a
         // regression detector rather than a coin flip
@@ -404,13 +379,7 @@ object StreamOps {
           approx_count_distinct(col("user_id"), 0.01).as("approx_users"))
         .select(unix_millis(col("janela_w.start")).as("janela_ms"),
           col("n"), col("approx_users"))
-        .writeStream.queryName(name).format("memory")
-        .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      recordStatePeak("sq8_stream_sketch", q)
-      fs.table(name)
     }
-  }
 
   /** The certification wrapper: streamed sketch vs the batch exact
     * twin, compared IN-QUERY — only oracle-reproducible columns plus
@@ -454,28 +423,22 @@ object StreamOps {
     * banded candidate verification needs a pair aggregation that a
     * no-watermark append stream cannot host. */
   def sq9StreamIncrDedup(s: SparkSession, dir: String): DataFrame = {
-    val name = s"sq9_${System.nanoTime()}"
     val incrMod = graft.llmops.TextOps.IncrMod
     val fp = graft.llmops.TextOps.normText(col("text"))
-    withStreamShuffle(s) { fs =>
+    drainToMemory(s, "sq9_stream_incr_dedup", "append") { fs =>
       val histFp = fs.read.parquet(s"$dir/documents.parquet")
         .filter(col("doc_id") % incrMod =!= 0)
         .select(md5(graft.llmops.TextOps.normText(col("text"))).as("fp"))
         .distinct()
         .withColumn("x_hit", lit(true))
-      val q = fs.readStream.schema(documentsSchema)
+      fs.readStream.schema(documentsSchema)
         .parquet(stageAsDir(s"$dir/documents.parquet"))
         .filter(col("doc_id") % incrMod === 0)
         .select(col("doc_id"), md5(fp).as("fp"))
         .join(broadcast(histFp), Seq("fp"), "left")
         .select(col("doc_id"),
           coalesce(col("x_hit"), lit(false)).as("exact_dup"))
-        .writeStream.queryName(name).format("memory")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      recordStatePeak("sq9_stream_incr_dedup", q)
-      fs.table(name).orderBy("doc_id")
-    }
+    }.orderBy("doc_id")
   }
 
   /** SQ9's DuckDB oracle: the identical batch probe (q92's exact
@@ -508,19 +471,13 @@ object StreamOps {
     * to expire state; on the bounded fixture the state is the
     * fingerprint set itself. */
   def sq2StreamDedup(s: SparkSession, dir: String): DataFrame = {
-    val name = s"sq2_${System.nanoTime()}"
     val fp = md5(regexp_replace(lower(trim(col("text"))), "\\s+", " "))
-    withStreamShuffle(s) { fs =>
-      val q = fs.readStream.schema(documentsSchema)
+    drainToMemory(s, "sq2_stream_dedup", "append") { fs =>
+      fs.readStream.schema(documentsSchema)
         .parquet(stageAsDir(s"$dir/documents.parquet"))
         .select(col("source"), fp.as("fp"))
         .dropDuplicates("source", "fp")
-        .writeStream.queryName(name).format("memory")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      recordStatePeak("sq2_stream_dedup", q)
-      fs.table(name).orderBy("source", "fp")
-    }
+    }.orderBy("source", "fp")
   }
 
   /** SQ2's DuckDB oracle: the batch distinct over the same input. */
@@ -540,21 +497,14 @@ object StreamOps {
     * emitted: within one horizon the emitted set equals the batch
     * DISTINCT (deterministic under any arrival order), which is the
     * oracle; non-key columns would depend on arrival order. */
-  def sq10StreamDedupTtl(s: SparkSession, dir: String): DataFrame = {
-    val name = s"sq10_${System.nanoTime()}"
-    withStreamShuffle(s) { fs =>
-      val q = eventsStream(fs, dir)
+  def sq10StreamDedupTtl(s: SparkSession, dir: String): DataFrame =
+    drainToMemory(s, "sq10_stream_dedup_ttl", "append") { fs =>
+      eventsStream(fs, dir)
         .withWatermark("ts", "2 hours")
         .select(col("user_id"), col("event_type"), col("ts"))
         .dropDuplicatesWithinWatermark("user_id", "event_type")
         .select(col("user_id"), col("event_type"))
-        .writeStream.queryName(name).format("memory")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      recordStatePeak("sq10_stream_dedup_ttl", q)
-      fs.table(name).orderBy("user_id", "event_type")
-    }
-  }
+    }.orderBy("user_id", "event_type")
 
   /** SQ10's DuckDB oracle: the fixture spans one horizon, so the
     * emitted key set is the batch distinct. */
@@ -574,33 +524,36 @@ object StreamOps {
     * (each qualifying pair is emitted exactly once), so the batch
     * interval join is the oracle — streaming/batch equivalence is the
     * check, like sq1/sq2. */
-  def sq3StreamJoin(s: SparkSession, dir: String): DataFrame = {
-    val name = s"sq3_${System.nanoTime()}"
-    withStreamShuffle(s) { fs =>
-      // one shared source for both sides (the sq18 rationale: fewer
-      // offset logs, one latestOffset round trip, half the replanned
-      // plan per batch); self-join semantics are row-identical
+  def sq3StreamJoin(s: SparkSession, dir: String): DataFrame =
+    drainToMemory(s, "sq3_stream_join", "append") { fs =>
       val ev = eventsStream(fs, dir)
-      def side(evType: String, prefix: String): DataFrame =
-        ev.filter(col("event_type") === evType)
-          .select(col("event_id").as(s"${prefix}_id"), col("user_id").as(s"${prefix}_user"),
-            col("ts").as(s"${prefix}_ts"))
-          .withWatermark(s"${prefix}_ts", "2 hours")
-      val clicks = side("click", "click")
-      val purchases = side("purchase", "purchase")
-      val q = clicks.join(purchases,
-        expr("""click_user = purchase_user
-               |AND purchase_ts >= click_ts
-               |AND purchase_ts <= click_ts + INTERVAL 1 HOUR""".stripMargin))
+      joinSide(ev, "click").join(joinSide(ev, "purchase"), ClickToPurchase1h)
         .select(col("click_user").as("user_id"), col("click_id"), col("purchase_id"),
           (unix_micros(col("purchase_ts")) - unix_micros(col("click_ts"))).as("delta_us"))
-        .writeStream.queryName(name).format("memory")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      recordStatePeak("sq3_stream_join", q)
-      fs.table(name).orderBy("click_id", "purchase_id")
-    }
-  }
+    }.orderBy("click_id", "purchase_id")
+
+  /** One watermarked side of the stream-stream joins (sq3, sq11, sq18,
+    * sq26): the `evType` rows of the query's events source `ev`, as
+    * `<evType>_id`, `<evType>_user` and `<evType>_ts`. Every side of a
+    * join is cut from the SAME source (a self-join), never a source of
+    * its own: each source costs its own offset planning, offset/commit
+    * log entries and per-batch latestOffset/getBatch round trips
+    * (~110 ms/batch measured for sq18's three), and multiplies the plan
+    * the per-batch replanner walks. Each side applies the same 2 h
+    * watermark to the same rows, so the join output is row-identical
+    * (oracle-proven). */
+  private def joinSide(ev: DataFrame, evType: String): DataFrame =
+    ev.filter(col("event_type") === evType)
+      .select(col("event_id").as(s"${evType}_id"), col("user_id").as(s"${evType}_user"),
+        col("ts").as(s"${evType}_ts"))
+      .withWatermark(s"${evType}_ts", "2 hours")
+
+  /** The click→purchase attribution interval shared by sq3, sq11 and
+    * sq26: a purchase within one hour after a click by the same user. */
+  private val ClickToPurchase1h = expr(
+    """click_user = purchase_user
+      |AND purchase_ts >= click_ts
+      |AND purchase_ts <= click_ts + INTERVAL 1 HOUR""".stripMargin)
 
   /** SQ3's DuckDB oracle: the identical interval join in batch. */
   val sq3Sql: String =
@@ -627,32 +580,13 @@ object StreamOps {
     * exactly the semantics the oracle encodes with its
     * `cts + 1 h < final_wm` bound. State stays
     * one-watermark-horizon-bounded per side, the same as sq3. */
-  def sq11StreamLeftJoin(s: SparkSession, dir: String): DataFrame = {
-    val name = s"sq11_${System.nanoTime()}"
-    withStreamShuffle(s) { fs =>
-      // one shared source for both sides (the sq18 rationale)
+  def sq11StreamLeftJoin(s: SparkSession, dir: String): DataFrame =
+    drainToMemory(s, "sq11_stream_left_join", "append") { fs =>
       val ev = eventsStream(fs, dir)
-      def side(evType: String, prefix: String): DataFrame =
-        ev.filter(col("event_type") === evType)
-          .select(col("event_id").as(s"${prefix}_id"), col("user_id").as(s"${prefix}_user"),
-            col("ts").as(s"${prefix}_ts"))
-          .withWatermark(s"${prefix}_ts", "2 hours")
-      val clicks = side("click", "click")
-      val purchases = side("purchase", "purchase")
-      val q = clicks.join(purchases,
-        expr("""click_user = purchase_user
-               |AND purchase_ts >= click_ts
-               |AND purchase_ts <= click_ts + INTERVAL 1 HOUR""".stripMargin),
-        "leftOuter")
+      joinSide(ev, "click").join(joinSide(ev, "purchase"), ClickToPurchase1h, "leftOuter")
         .select(col("click_user").as("user_id"), col("click_id"), col("purchase_id"),
           (unix_micros(col("purchase_ts")) - unix_micros(col("click_ts"))).as("delta_us"))
-        .writeStream.queryName(name).format("memory")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      recordStatePeak("sq11_stream_left_join", q)
-      fs.table(name).orderBy(col("click_id"), col("purchase_id").asc_nulls_first)
-    }
-  }
+    }.orderBy(col("click_id"), col("purchase_id").asc_nulls_first)
 
   /** SQ11's DuckDB oracle: the batch interval join UNION ALL the
     * unconverted clicks whose join window closed under the final
@@ -703,34 +637,14 @@ object StreamOps {
     * unmatched-residual legs under the drained query's final global
     * watermark (min of the two sides' max event times − 2 h) — the
     * sq11 discipline extended symmetrically. */
-  def sq26StreamFullOuter(s: SparkSession, dir: String): DataFrame = {
-    val name = s"sq26_${System.nanoTime()}"
-    withStreamShuffle(s) { fs =>
-      // one shared source for both sides (the sq18 rationale)
+  def sq26StreamFullOuter(s: SparkSession, dir: String): DataFrame =
+    drainToMemory(s, "sq26_stream_full_outer", "append") { fs =>
       val ev = eventsStream(fs, dir)
-      def side(evType: String, prefix: String): DataFrame =
-        ev.filter(col("event_type") === evType)
-          .select(col("event_id").as(s"${prefix}_id"), col("user_id").as(s"${prefix}_user"),
-            col("ts").as(s"${prefix}_ts"))
-          .withWatermark(s"${prefix}_ts", "2 hours")
-      val clicks = side("click", "click")
-      val purchases = side("purchase", "purchase")
-      val q = clicks.join(purchases,
-        expr("""click_user = purchase_user
-               |AND purchase_ts >= click_ts
-               |AND purchase_ts <= click_ts + INTERVAL 1 HOUR""".stripMargin),
-        "fullOuter")
+      joinSide(ev, "click").join(joinSide(ev, "purchase"), ClickToPurchase1h, "fullOuter")
         .select(coalesce(col("click_user"), col("purchase_user")).as("user_id"),
           col("click_id"), col("purchase_id"),
           (unix_micros(col("purchase_ts")) - unix_micros(col("click_ts"))).as("delta_us"))
-        .writeStream.queryName(name).format("memory")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      recordStatePeak("sq26_stream_full_outer", q)
-      fs.table(name).orderBy(col("click_id").asc_nulls_first,
-        col("purchase_id").asc_nulls_first)
-    }
-  }
+    }.orderBy(col("click_id").asc_nulls_first, col("purchase_id").asc_nulls_first)
 
   val sq26Sql: String =
     """WITH c AS (
@@ -785,25 +699,17 @@ object StreamOps {
     * counts the distinct 15-min windows feeding each hour (a
     * completeness signal at a glance). State is two
     * watermark-horizon-bounded window maps — scale-safe for 24/7. */
-  def sq12StreamRollup(s: SparkSession, dir: String): DataFrame = {
-    val name = s"sq12_${System.nanoTime()}"
-    withStreamShuffle(s) { fs =>
-      val q15 = eventsStream(fs, dir)
+  def sq12StreamRollup(s: SparkSession, dir: String): DataFrame =
+    drainToMemory(s, "sq12_stream_rollup", "append") { fs =>
+      eventsStream(fs, dir)
         .withWatermark("ts", "2 hours")
         .groupBy(window(col("ts"), "15 minutes").as("w15"), col("event_type"))
         .agg(count(lit(1)).as("n15"))
-      val q = q15
         .groupBy(window(window_time(col("w15")), "1 hour").as("w1h"), col("event_type"))
         .agg(sum("n15").as("n_events"), count(lit(1)).as("n_subwindows"))
         .select(unix_millis(col("w1h.start")).as("janela_ms"), col("event_type"),
           col("n_events"), col("n_subwindows"))
-        .writeStream.queryName(name).format("memory")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      recordStatePeak("sq12_stream_rollup", q)
-      fs.table(name).orderBy("janela_ms", "event_type")
-    }
-  }
+    }.orderBy("janela_ms", "event_type")
 
   /** SQ12's DuckDB oracle: the batch hourly rollup over hours fully
     * closed under the final watermark (max ts − 2 h). */
@@ -971,15 +877,9 @@ object StreamOps {
     * the fixture. */
   def sq6Sessionize(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val name = s"sq6_${System.nanoTime()}"
     val gapUs = graft.queries.Queries.SessionGapUs
-    val streamed = withStreamShuffle(s) { fs =>
-      val q = sessionizeStateful(eventsStream(fs, dir), gapUs)
-        .writeStream.queryName(name).format("memory")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      recordStatePeak("sq6_sessionize", q)
-      fs.table(name)
+    val streamed = drainToMemory(s, "sq6_sessionize", "append") { fs =>
+      sessionizeStateful(eventsStream(fs, dir), gapUs)
     }
     streamed.as[Session]
       .unionAll(finalOpenSessions(eventsBatch(s, dir), gapUs)).toDF()
@@ -1056,32 +956,15 @@ object StreamOps {
     * stage extra "flush tick" files alongside the fixture). Returns
     * every emitted session: closed-by-event AND timed-out finals; no
     * recovery union. */
-  def sq6SessionizeTimeout(s: SparkSession, srcDir: String): DataFrame = {
-    val name = s"sq6t_${System.nanoTime()}"
-    val gapUs = graft.queries.Queries.SessionGapUs
-    withStreamShuffle(s) { fs =>
-      val src = TsBridge.normalize(
+  def sq6SessionizeTimeout(s: SparkSession, srcDir: String): DataFrame =
+    // sq7's family: sq7 is this impl's SparkEntry caller
+    // (sq6_sessionize is the flatMapGroupsWithState variant above)
+    drainToMemory(s, "sq7_sessionize_timeout", "append") { fs =>
+      sessionizeStatefulTimeout(TsBridge.normalize(
         fs.readStream.schema(eventsSchema(tsTypeAt(fs, srcDir)))
-          .parquet(stageAsDir(srcDir)))
-      val q = sessionizeStatefulTimeout(src, gapUs)
-        .writeStream.queryName(name).format("memory")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      // recorded under sq7's key: sq7 is this impl's SparkEntry
-      // canonical caller (sq6_sessionize is the FMGWS variant above)
-      recordStatePeak("sq7_sessionize_timeout", q)
-      fs.table(name).orderBy("user_id", "sid")
-    }
-  }
+          .parquet(stageAsDir(srcDir))), graft.queries.Queries.SessionGapUs)
+    }.orderBy("user_id", "sid")
 
-  /** SQ7: the EventTimeTimeout sessionizer driven to completion by a
-    * staged flush tick — a sentinel event one gap + one minute past the
-    * fixture's max event time (standing in for the later traffic an
-    * unbounded stream always has), filtered back out of the result.
-    * With the watermark past every real user's gap boundary, every
-    * final session emits from the TIMEOUT branch — so the oracle is
-    * the batch q22 SQL with no recovery union anywhere: the
-    * production shape, driver-hash-checked. */
   /** Stage the events fixture into a temp dir PLUS a flush-tick
     * sentinel one gap + one minute past max(ts) (same ts vintage as
     * the fixture — the streaming schema probe reads the whole dir).
@@ -1089,12 +972,12 @@ object StreamOps {
     * two timeout sessionizers (sq7 GroupStateTimeout, sq15 V2
     * timers). */
   private def stageWithFlushTick(s: SparkSession, dir: String, gapUs: Long): String = {
-    val work = java.nio.file.Files.createTempDirectory("graft_flush_")
-    work.toFile.deleteOnExit()
+    // removed recursively at exit: the returned source reads it lazily
+    val work = graft.operators.PlanCache.tempDir("graft_flush_")
     val raw = s.read.parquet(s"$dir/events.parquet")
     val maxRow = TsBridge.normalize(raw).agg(max(unix_micros(col("ts")))).head()
     val staged = if (maxRow.isNullAt(0)) raw.repartition(1) else raw
-    staged.write.mode("append").parquet(work.toString)
+    staged.write.mode("append").parquet(work)
     if (!maxRow.isNullAt(0)) {
       val flushUs = maxRow.getLong(0) + gapUs + 60L * 1000000
       val tickTs = raw.schema("ts").dataType match {
@@ -1107,11 +990,19 @@ object StreamOps {
         lit(-1L).as("event_id"), lit(-1L).as("user_id"),
         lit("view").as("event_type"), lit(0d).as("value"),
         tickTs.as("ts"))
-        .write.mode("append").parquet(work.toString)
+        .write.mode("append").parquet(work)
     }
-    work.toString
+    work
   }
 
+  /** SQ7: the EventTimeTimeout sessionizer driven to completion by a
+    * staged flush tick — a sentinel event one gap + one minute past the
+    * fixture's max event time (standing in for the later traffic an
+    * unbounded stream always has), filtered back out of the result.
+    * With the watermark past every real user's gap boundary, every
+    * final session emits from the TIMEOUT branch — so the oracle is
+    * the batch q22 SQL with no recovery union anywhere: the
+    * production shape, driver-hash-checked. */
   def sq7SessionizeTimeout(s: SparkSession, dir: String): DataFrame = {
     val gapUs = graft.queries.Queries.SessionGapUs
     val work = stageWithFlushTick(s, dir, gapUs)
@@ -1231,25 +1122,18 @@ object StreamOps {
     * n_events is monotone). The oracle is the batch profile with the
     * identical gap rule — streaming/batch equivalence, like sq6. */
   def sq13StreamProfile(s: SparkSession, dir: String): DataFrame = {
-    val name = s"sq13_${System.nanoTime()}"
     val gapUs = graft.queries.Queries.SessionGapUs
-    val streamed = withStreamShuffle(s) { fs =>
-      fs.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val streamed = drainToMemory(s, "sq13_stream_profile", "append") { fs =>
+      fs.conf.set(ProviderClassConf, RocksDbProvider)
       import fs.implicits._
-      val typed = eventsStream(fs, dir)
+      eventsStream(fs, dir)
         .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us"))
         .as[Ev]
-      val q = typed.groupByKey(_.user_id)
+        .groupByKey(_.user_id)
         .transformWithState(new ProfileProcessor(gapUs),
           org.apache.spark.sql.streaming.TimeMode.None(),
           org.apache.spark.sql.streaming.OutputMode.Append())
         .toDF()
-        .writeStream.queryName(name).format("memory")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      recordStatePeak("sq13_stream_profile", q)
-      fs.table(name)
     }
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("user_id").orderBy(col("n_events").desc)
@@ -1277,7 +1161,8 @@ object StreamOps {
     * overwrites only the affected partitions (dynamic partition
     * overwrite), which sq1's windowed shape composes with. */
   def sq14ForeachBatchSink(s: SparkSession, dir: String): DataFrame = {
-    val out = s"/tmp/graft_sq14_${System.nanoTime()}"
+    // removed recursively at exit: the returned frame reads it lazily
+    val out = graft.operators.PlanCache.tempDir("graft_sq14_")
     withStreamShuffle(s) { fs =>
       val agg = eventsStream(fs, dir)
         .groupBy("event_type")
@@ -1314,8 +1199,7 @@ object StreamOps {
   def sq13Incremental(s: SparkSession, srcDir: String, checkpoint: String,
       outDir: String, changelog: Boolean = false): Long = {
     withStreamShuffle(s) { fs =>
-      fs.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      fs.conf.set(ProviderClassConf, RocksDbProvider)
       // the recovery drill's changelog leg (round-13 verdict #5): the
       // spec runs the same split-input restart with changelog
       // checkpointing on and pins profile equality + the
@@ -1407,28 +1291,22 @@ object StreamOps {
     * sq6/sq7. */
   def sq15StreamTimerSession(s: SparkSession, dir: String): DataFrame = {
     val gapUs = graft.queries.Queries.SessionGapUs
-    val name = s"sq15_${System.nanoTime()}"
     val work = stageWithFlushTick(s, dir, gapUs)
-    val streamed = withStreamShuffle(s, WideStatePartitions) { fs =>
-      fs.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val streamed = drainToMemory(s, "sq15_stream_timer_session", "append",
+        WideStatePartitions) { fs =>
+      fs.conf.set(ProviderClassConf, RocksDbProvider)
       import fs.implicits._
-      val typed = TsBridge.normalize(
+      TsBridge.normalize(
           fs.readStream.schema(eventsSchema(tsTypeAt(fs, work))).parquet(stageAsDir(work)))
         .withWatermark("ts", "0 seconds")
         .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us"),
           col("ts"))
         .as[EvW]
-      val q = typed.groupByKey(_.user_id)
+        .groupByKey(_.user_id)
         .transformWithState(new TimerSessionProcessor(gapUs),
           org.apache.spark.sql.streaming.TimeMode.EventTime(),
           org.apache.spark.sql.streaming.OutputMode.Append())
         .toDF()
-        .writeStream.queryName(name).format("memory")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      recordStatePeak("sq15_stream_timer_session", q)
-      fs.table(name)
     }
     streamed.filter(col("user_id") >= 0).orderBy("user_id", "sid")
   }
@@ -1480,24 +1358,17 @@ object StreamOps {
     * ListState — bounded O(N)-per-user state under any stream volume;
     * the batch oracle ranks each user's events by recency. */
   def sq16StreamLastn(s: SparkSession, dir: String): DataFrame = {
-    val name = s"sq16_${System.nanoTime()}"
-    val streamed = withStreamShuffle(s) { fs =>
-      fs.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val streamed = drainToMemory(s, "sq16_stream_lastn", "append") { fs =>
+      fs.conf.set(ProviderClassConf, RocksDbProvider)
       import fs.implicits._
-      val typed = eventsStream(fs, dir)
+      eventsStream(fs, dir)
         .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us"))
         .as[Ev]
-      val q = typed.groupByKey(_.user_id)
+        .groupByKey(_.user_id)
         .transformWithState(new LastNProcessor,
           org.apache.spark.sql.streaming.TimeMode.None(),
           org.apache.spark.sql.streaming.OutputMode.Append())
         .toDF()
-        .writeStream.queryName(name).format("memory")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      recordStatePeak("sq16_stream_lastn", q)
-      fs.table(name)
     }
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("user_id").orderBy(col("n_seen").desc)
@@ -1568,25 +1439,18 @@ object StreamOps {
     * (ListState), the V2 arbitrary-stateful API surface is complete.
     * Oracle: the batch pivot. */
   def sq17StreamTypeCounts(s: SparkSession, dir: String): DataFrame = {
-    val name = s"sq17_${System.nanoTime()}"
-    val streamed = withStreamShuffle(s) { fs =>
-      fs.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val streamed = drainToMemory(s, "sq17_stream_type_counts", "append") { fs =>
+      fs.conf.set(ProviderClassConf, RocksDbProvider)
       import fs.implicits._
-      val typed = eventsStream(fs, dir)
+      eventsStream(fs, dir)
         .select(col("user_id"), col("event_id"), unix_micros(col("ts")).as("us"),
           col("event_type"))
         .as[EvT]
-      val q = typed.groupByKey(_.user_id)
+        .groupByKey(_.user_id)
         .transformWithState(new TypeCountProcessor,
           org.apache.spark.sql.streaming.TimeMode.None(),
           org.apache.spark.sql.streaming.OutputMode.Append())
         .toDF()
-        .writeStream.queryName(name).format("memory")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      recordStatePeak("sq17_stream_type_counts", q)
-      fs.table(name)
     }
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("user_id").orderBy(col("total").desc)
@@ -1623,24 +1487,12 @@ object StreamOps {
     * the intermediate — state stores co-locate); per-side state stays
     * one-watermark-horizon-bounded exactly as sq3. Oracle: the batch
     * 3-way interval join. */
-  def sq18StreamJoinChain(s: SparkSession, dir: String): DataFrame = {
-    val name = s"sq18_${System.nanoTime()}"
-    withStreamShuffle(s) { fs =>
-      // ONE file stream source shared by the three sides (self-join),
-      // not three: each source costs its own offset planning, offset/
-      // commit log entries and per-batch latestOffset/getBatch round
-      // trips (~110 ms/batch measured for the three), and triples the
-      // plan the per-batch replanner walks (queryPlanning was 666 ms
-      // on batch 0). Identical semantics: each side applies the same
-      // 2 h watermark to the same rows, and the join output is
-      // row-identical (oracle-proven).
+  def sq18StreamJoinChain(s: SparkSession, dir: String): DataFrame =
+    drainToMemory(s, "sq18_stream_join_chain", "append") { fs =>
+      // ONE source for the three sides (see joinSide): queryPlanning
+      // was 666 ms on batch 0 with a source per side
       val ev = eventsStream(fs, dir)
-      def side(evType: String, prefix: String): DataFrame =
-        ev.filter(col("event_type") === evType)
-          .select(col("event_id").as(s"${prefix}_id"),
-            col("user_id").as(s"${prefix}_user"), col("ts").as(s"${prefix}_ts"))
-          .withWatermark(s"${prefix}_ts", "2 hours")
-      val vc = side("view", "view").join(side("click", "click"),
+      val vc = joinSide(ev, "view").join(joinSide(ev, "click"),
         expr("""view_user = click_user
                |AND click_ts >= view_ts
                |AND click_ts <= view_ts + INTERVAL 6 HOURS""".stripMargin))
@@ -1649,20 +1501,14 @@ object StreamOps {
         // event-time metadata) and let click_ts carry the watermark
         .select(col("view_id"), unix_micros(col("view_ts")).as("view_us"),
           col("click_id"), col("click_user"), col("click_ts"))
-      val q = vc.join(side("purchase", "purchase"),
+      vc.join(joinSide(ev, "purchase"),
         expr("""click_user = purchase_user
                |AND purchase_ts >= click_ts
                |AND purchase_ts <= click_ts + INTERVAL 12 HOURS""".stripMargin))
         .select(col("click_user").as("user_id"), col("view_id"), col("click_id"),
           col("purchase_id"),
           (unix_micros(col("purchase_ts")) - col("view_us")).as("funnel_us"))
-        .writeStream.queryName(name).format("memory")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      recordStatePeak("sq18_stream_join_chain", q)
-      fs.table(name).orderBy("view_id", "click_id", "purchase_id")
-    }
-  }
+    }.orderBy("view_id", "click_id", "purchase_id")
 
   /** SQ18's DuckDB oracle: the identical 3-way interval join in batch. */
   val sq18Sql: String =
@@ -1686,30 +1532,6 @@ object StreamOps {
   val LateDelayUs: Long = 3600000000L
   val LateWindowUs: Long = 3600000000L
 
-  /** SQ19: LATE-DATA DROP SEMANTICS, pinned — the one watermark
-    * behavior a single-batch AvailableNow run can never exercise
-    * (sq1Append sees all data before the watermark first advances, so
-    * nothing is ever late). Here the source REPLAYS in three
-    * deterministic micro-batches (events staged into three files by
-    * event_id mod 3, processing order forced by modification time,
-    * `maxFilesPerTrigger=1`), so later batches carry rows far older
-    * than the watermark batch 1 established. The protocol this pins
-    * was MEASURED, not assumed (numRowsDroppedByWatermark per batch:
-    * 0, 0, 718): the watermark takes effect for LATE-ROW FILTERING
-    * one micro-batch after the data that produced it — batch i
-    * filters against max-event-time through batch i−2 (the
-    * planning-time propagation lag) — while EVICTION/EMISSION at a
-    * batch's end uses the batch-end watermark (data through i−1),
-    * and the AvailableNow final no-data batch emits everything the
-    * global watermark closes. The oracle SIMULATES exactly this
-    * (per-file max event times → lagged filter watermarks → the
-    * global emit rule), so the hash match pins the engine's actual
-    * semantics, propagation lag and strict inequalities included.
-    *
-    * Scale shape: state is one row per open window; late rows die at
-    * the EventTimeWatermark filter BEFORE the aggregation shuffle —
-    * which is the entire production point of watermarks: unbounded
-    * disorder costs state, bounded disorder costs a filter. */
   /** Shared sq19/sq20 staging: split events into three files by
     * event_id mod 3 with forced ascending mtimes, so a
     * maxFilesPerTrigger=1 replay processes them in a deterministic
@@ -1755,24 +1577,42 @@ object StreamOps {
     e.schema
   }
 
+  /** SQ19: LATE-DATA DROP SEMANTICS, pinned — the one watermark
+    * behavior a single-batch AvailableNow run can never exercise
+    * (sq1Append sees all data before the watermark first advances, so
+    * nothing is ever late). Here the source REPLAYS in three
+    * deterministic micro-batches (events staged into three files by
+    * event_id mod 3, processing order forced by modification time,
+    * `maxFilesPerTrigger=1`), so later batches carry rows far older
+    * than the watermark batch 1 established. The protocol this pins
+    * was MEASURED, not assumed (numRowsDroppedByWatermark per batch:
+    * 0, 0, 718): the watermark takes effect for LATE-ROW FILTERING
+    * one micro-batch after the data that produced it — batch i
+    * filters against max-event-time through batch i−2 (the
+    * planning-time propagation lag) — while EVICTION/EMISSION at a
+    * batch's end uses the batch-end watermark (data through i−1),
+    * and the AvailableNow final no-data batch emits everything the
+    * global watermark closes. The oracle SIMULATES exactly this
+    * (per-file max event times → lagged filter watermarks → the
+    * global emit rule), so the hash match pins the engine's actual
+    * semantics, propagation lag and strict inequalities included.
+    *
+    * Scale shape: state is one row per open window; late rows die at
+    * the EventTimeWatermark filter BEFORE the aggregation shuffle —
+    * which is the entire production point of watermarks: unbounded
+    * disorder costs state, bounded disorder costs a filter. */
   def sq19LateDataAudit(s: SparkSession, dir: String): DataFrame = {
     val staged = graft.operators.PlanCache.tempDir("graft_late_")
     val schema = stageByMod3(s, dir, staged)
-    val name = s"sq19_${System.nanoTime()}"
-    withStreamShuffle(s) { fs =>
-      val q = fs.readStream.schema(schema)
+    drainToMemory(s, "sq19_late_data", "append") { fs =>
+      fs.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(staged)
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "1 hour").as("w"))
         .agg(count(lit(1)).as("n"),
           sum(col("value").cast(DecimalType(18, 2))).cast("double").as("soma"))
         .select(unix_millis(col("w.start")).as("janela_ms"), col("n"), col("soma"))
-        .writeStream.queryName(name).format("memory")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      recordStatePeak("sq19_late_data", q)
-      fs.table(name).orderBy("janela_ms")
-    }
+    }.orderBy("janela_ms")
   }
 
   /** The batch-protocol simulation: per-file max event times, the
@@ -1821,23 +1661,16 @@ object StreamOps {
   def sq20UpdateMode(s: SparkSession, dir: String): DataFrame = {
     val staged = graft.operators.PlanCache.tempDir("graft_upd_")
     val schema = stageByMod3(s, dir, staged)
-    val name = s"sq20_${System.nanoTime()}"
-    withStreamShuffle(s) { fs =>
-      val q = fs.readStream.schema(schema)
+    drainToMemory(s, "sq20_update_mode", "update") { fs =>
+      fs.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(staged)
         .withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "1 hour").as("w"))
         .agg(count(lit(1)).as("n"))
         .select(unix_millis(col("w.start")).as("janela_ms"), col("n"))
-        .writeStream.queryName(name).format("memory")
-        .outputMode("update").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      recordStatePeak("sq20_update_mode", q)
-      fs.table(name)
-        .groupBy("janela_ms")
-        .agg(max(col("n")).as("final_n"), count(lit(1)).as("n_emissions"))
-        .orderBy("janela_ms")
-    }
+    }.groupBy("janela_ms")
+      .agg(max(col("n")).as("final_n"), count(lit(1)).as("n_emissions"))
+      .orderBy("janela_ms")
   }
 
   /** Per window: survivors under the lagged filter give the final
@@ -1881,15 +1714,10 @@ object StreamOps {
     * the oracle. */
   def sq21StreamPsiMonitor(s: SparkSession, dir: String): DataFrame = {
     import graft.queries.PipelineOps.{PsiBucketWidth, PsiMaxBucket, PsiThresh}
-    val name = s"sq21_${System.nanoTime()}"
     def band(c: org.apache.spark.sql.Column) =
       least(floor(c / PsiBucketWidth), lit(PsiMaxBucket)).cast("int").as("band")
-    withStreamShuffle(s) { fs =>
-      val baseline = TsBridge.normalize(fs.read.parquet(s"$dir/events.parquet"))
-        .filter(col("event_id") % 2 === 0)
-        .groupBy(col("event_type"), band(col("value")))
-        .agg(count(lit(1)).as("cb"))
-      val q = eventsStream(fs, dir)
+    val live = drainToMemory(s, "sq21_stream_psi_monitor", "append") { fs =>
+      eventsStream(fs, dir)
         .filter(col("event_id") % 2 === 1)
         .withWatermark("ts", "2 hours")
         .groupBy(window(col("ts"), "1 day").as("w"), col("event_type"),
@@ -1897,47 +1725,47 @@ object StreamOps {
         .agg(count(lit(1)).as("cl"))
         .select(unix_millis(col("w.start")).as("janela_ms"),
           col("event_type"), col("band"), col("cl"))
-        .writeStream.queryName(name).format("memory")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      recordStatePeak("sq21_stream_psi_monitor", q)
-      val live = fs.table(name)
-      // monitor read side (batch over the sink): replicate the static
-      // baseline across the closed days, union the band sets. The day
-      // list is BOUNDED by the monitor horizon (one row per closed
-      // day), so reading it back is a scalar-sized action — and a
-      // fresh literal frame sidesteps the self-referencing memory-sink
-      // plan (full-outer join of a view with its own Deduplicate is a
-      // conflicting-reference error)
-      import scala.jdk.CollectionConverters._
-      val dayVals = live.select("janela_ms").distinct()
-        .collect().map(_.getLong(0)).toSeq
-      val days = fs.createDataFrame(
-        dayVals.map(org.apache.spark.sql.Row(_)).asJava,
-        StructType(Seq(StructField("janela_ms", LongType))))
-      val sided = live
-        .join(days.crossJoin(baseline), Seq("janela_ms", "event_type", "band"),
-          "full_outer")
-        .select(col("janela_ms"), col("event_type"), col("band"),
-          coalesce(col("cl"), lit(0L)).as("cl"),
-          coalesce(col("cb"), lit(0L)).as("cb"))
-      val wk = org.apache.spark.sql.expressions.Window
-        .partitionBy("janela_ms", "event_type")
-      val base = sided
-        .withColumn("nl", sum("cl").over(wk))
-        .withColumn("nb", sum("cb").over(wk))
-        .withColumn("nbands", count(lit(1)).over(wk))
-      val pl = (col("cl") + 1).cast("double") / (col("nl") + col("nbands"))
-      val pb = (col("cb") + 1).cast("double") / (col("nb") + col("nbands"))
-      base.groupBy("janela_ms", "event_type")
-        .agg(max("nl").as("n_live"), max("nb").as("n_base"),
-          sum(round((pl - pb) * log(pl / pb), 10).cast(DecimalType(28, 10)))
-            .as("psi10"))
-        .select(col("janela_ms"), col("event_type"), col("n_live"),
-          col("n_base"), round(col("psi10").cast("double"), 6).as("psi"))
-        .withColumn("drifted", col("psi") >= PsiThresh)
-        .orderBy("janela_ms", "event_type")
     }
+    // monitor read side (batch over the sink, on the query's fork):
+    // replicate the static baseline across the closed days, union the
+    // band sets. The day list is BOUNDED by the monitor horizon (one
+    // row per closed day), so reading it back is a scalar-sized action
+    // — and a fresh literal frame sidesteps the self-referencing
+    // memory-sink plan (full-outer join of a view with its own
+    // Deduplicate is a conflicting-reference error)
+    val fs = live.sparkSession
+    val baseline = TsBridge.normalize(fs.read.parquet(s"$dir/events.parquet"))
+      .filter(col("event_id") % 2 === 0)
+      .groupBy(col("event_type"), band(col("value")))
+      .agg(count(lit(1)).as("cb"))
+    import scala.jdk.CollectionConverters._
+    val dayVals = live.select("janela_ms").distinct()
+      .collect().map(_.getLong(0)).toSeq
+    val days = fs.createDataFrame(
+      dayVals.map(org.apache.spark.sql.Row(_)).asJava,
+      StructType(Seq(StructField("janela_ms", LongType))))
+    val sided = live
+      .join(days.crossJoin(baseline), Seq("janela_ms", "event_type", "band"),
+        "full_outer")
+      .select(col("janela_ms"), col("event_type"), col("band"),
+        coalesce(col("cl"), lit(0L)).as("cl"),
+        coalesce(col("cb"), lit(0L)).as("cb"))
+    val wk = org.apache.spark.sql.expressions.Window
+      .partitionBy("janela_ms", "event_type")
+    val base = sided
+      .withColumn("nl", sum("cl").over(wk))
+      .withColumn("nb", sum("cb").over(wk))
+      .withColumn("nbands", count(lit(1)).over(wk))
+    val pl = (col("cl") + 1).cast("double") / (col("nl") + col("nbands"))
+    val pb = (col("cb") + 1).cast("double") / (col("nb") + col("nbands"))
+    base.groupBy("janela_ms", "event_type")
+      .agg(max("nl").as("n_live"), max("nb").as("n_base"),
+        sum(round((pl - pb) * log(pl / pb), 10).cast(DecimalType(28, 10)))
+          .as("psi10"))
+      .select(col("janela_ms"), col("event_type"), col("n_live"),
+        col("n_base"), round(col("psi10").cast("double"), 6).as("psi"))
+      .withColumn("drifted", col("psi") >= PsiThresh)
+      .orderBy("janela_ms", "event_type")
   }
 
   /** SQ21's DuckDB oracle: the batch twin — closed days under the
@@ -2015,30 +1843,6 @@ object StreamOps {
 
   // --------------------------------------- sq22 streaming near-dup gate
 
-  /** SQ22: STREAMING NEAR-DUP ADMISSION GATE — the MinHash-LSH axis of
-    * the crawl-ingest gate, the near-dup face of sq9 exactly as sq9 is
-    * the exact-dup face of q92: each arriving new-batch document
-    * (doc_id ≡ 0 mod [[graft.llmops.TextOps.IncrMod]]) computes its
-    * k=16 MinHash signature IN-ROW (codegen'd higher-order functions
-    * over the shingle array — no shuffle, no state), bands it with the
-    * q37 geometry, and probes the STATIC history band index; a document
-    * whose every band misses is admitted.
-    *
-    * Scale shape: the stream side is a pure per-row map (signature +
-    * 4 band hashes) feeding four stateless broadcast left joins against
-    * the persisted history index — arrival order cannot affect any
-    * row's result, so the batch probe is the oracle (the sq9 argument).
-    * At production index sizes the same joins shuffle on bh instead of
-    * broadcasting (one conf flip, same algebra), or a Bloom filter over
-    * bh pre-screens (q87). What this gate deliberately does NOT do is
-    * pair verification (exact Jaccard needs a pair aggregation a
-    * no-watermark append stream cannot host) — it emits the BAND-HIT
-    * COUNT so downstream batch verification (q37's verify leg) prices
-    * only flagged docs.
-    *
-    * Short documents (<3 words, no shingles) carry null band hashes —
-    * null join keys never match, so they admit with 0 hits, matching
-    * the batch index which never contains them. */
   /** The per-row MinHash band hashes of a `text` column — distinct
     * word-3-gram shingles → 60-bit md5 base hashes → k universal-hash
     * minima → [[graft.llmops.TextOps.Bands]] band md5s, all inside one
@@ -2073,11 +1877,34 @@ object StreamOps {
       .select(col("doc_id") +: bandCols: _*)
   }
 
+  /** SQ22: STREAMING NEAR-DUP ADMISSION GATE — the MinHash-LSH axis of
+    * the crawl-ingest gate, the near-dup face of sq9 exactly as sq9 is
+    * the exact-dup face of q92: each arriving new-batch document
+    * (doc_id ≡ 0 mod [[graft.llmops.TextOps.IncrMod]]) computes its
+    * k=16 MinHash signature IN-ROW (codegen'd higher-order functions
+    * over the shingle array — no shuffle, no state), bands it with the
+    * q37 geometry, and probes the STATIC history band index; a document
+    * whose every band misses is admitted.
+    *
+    * Scale shape: the stream side is a pure per-row map (signature +
+    * 4 band hashes) feeding four stateless broadcast left joins against
+    * the persisted history index — arrival order cannot affect any
+    * row's result, so the batch probe is the oracle (the sq9 argument).
+    * At production index sizes the same joins shuffle on bh instead of
+    * broadcasting (one conf flip, same algebra), or a Bloom filter over
+    * bh pre-screens (q87). What this gate deliberately does NOT do is
+    * pair verification (exact Jaccard needs a pair aggregation a
+    * no-watermark append stream cannot host) — it emits the BAND-HIT
+    * COUNT so downstream batch verification (q37's verify leg) prices
+    * only flagged docs.
+    *
+    * Short documents (<3 words, no shingles) carry null band hashes —
+    * null join keys never match, so they admit with 0 hits, matching
+    * the batch index which never contains them. */
   def sq22StreamNeardupGate(s: SparkSession, dir: String): DataFrame = {
-    val name = s"sq22_${System.nanoTime()}"
     val T = graft.llmops.TextOps
     val incrMod = T.IncrMod
-    withStreamShuffle(s) { fs =>
+    drainToMemory(s, "sq22_stream_neardup_gate", "append") { fs =>
       // the corpus LSH index a production gate keeps persisted: q37's
       // banding of the HISTORY docs' signature table (session artifact)
       val hist = T.bandedSigs(
@@ -2095,15 +1922,8 @@ object StreamOps {
       val hits = (0 until T.Bands)
         .map(bnd => coalesce(col(s"xh$bnd"), lit(false)).cast("int"))
         .reduce(_ + _)
-      val q = probed
-        .select(col("doc_id"), hits.as("n_band_hits"),
-          (hits === 0).as("admitted"))
-        .writeStream.queryName(name).format("memory")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      recordStatePeak("sq22_stream_neardup_gate", q)
-      fs.table(name).orderBy("doc_id")
-    }
+      probed.select(col("doc_id"), hits.as("n_band_hits"), (hits === 0).as("admitted"))
+    }.orderBy("doc_id")
   }
 
   /** SQ22's DuckDB oracle: the identical batch probe — new docs' band
@@ -2179,9 +1999,8 @@ object StreamOps {
     * pre-scaling inside the sum would break the exact cross-engine
     * term discipline for every normal-scale value. */
   def sq23StreamAnomaly(s: SparkSession, dir: String): DataFrame = {
-    val name = s"sq23_${System.nanoTime()}"
-    withStreamShuffle(s, WideStatePartitions) { fs =>
-      val q = eventsStream(fs, dir)
+    val agg = drainToMemory(s, "sq23_stream_anomaly", "append", WideStatePartitions) { fs =>
+      eventsStream(fs, dir)
         .withWatermark("ts", "2 hours")
         .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
         // DECIMAL(38,6), not (28,6): the adversarial events fixture
@@ -2194,27 +2013,23 @@ object StreamOps {
             .as("s2"))
         .select(unix_millis(col("w.start")).as("janela_ms"), col("event_type"),
           col("n"), col("sv"), col("s2"))
-        .writeStream.queryName(name).format("memory")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      recordStatePeak("sq23_stream_anomaly", q)
-      val wl = org.apache.spark.sql.expressions.Window
-        .partitionBy("event_type").orderBy("janela_ms")
-      val m = fs.table(name)
-        .withColumn("mean", col("sv").cast("double") / col("n"))
-        .withColumn("varv", col("s2").cast("double") / col("n") -
-          (col("sv").cast("double") / col("n")) *
-            (col("sv").cast("double") / col("n")))
-      m.withColumn("pm", lag("mean", 1).over(wl))
-        .withColumn("pv", lag("varv", 1).over(wl))
-        .select(col("event_type"), col("janela_ms"), col("n"),
-          round(col("mean"), 6).as("mean_v"),
-          when(col("pv") > 0,
-            round((col("mean") - col("pm")) / sqrt(col("pv") / col("n")), 6))
-            .as("z"))
-        .withColumn("anomalous", coalesce(abs(col("z")) >= 3.0, lit(false)))
-        .orderBy("janela_ms", "event_type")
     }
+    val wl = org.apache.spark.sql.expressions.Window
+      .partitionBy("event_type").orderBy("janela_ms")
+    val m = agg
+      .withColumn("mean", col("sv").cast("double") / col("n"))
+      .withColumn("varv", col("s2").cast("double") / col("n") -
+        (col("sv").cast("double") / col("n")) *
+          (col("sv").cast("double") / col("n")))
+    m.withColumn("pm", lag("mean", 1).over(wl))
+      .withColumn("pv", lag("varv", 1).over(wl))
+      .select(col("event_type"), col("janela_ms"), col("n"),
+        round(col("mean"), 6).as("mean_v"),
+        when(col("pv") > 0,
+          round((col("mean") - col("pm")) / sqrt(col("pv") / col("n")), 6))
+          .as("z"))
+      .withColumn("anomalous", coalesce(abs(col("z")) >= 3.0, lit(false)))
+      .orderBy("janela_ms", "event_type")
   }
 
   /** SQ23's DuckDB oracle: the batch twin — hours fully closed under
@@ -2253,21 +2068,6 @@ object StreamOps {
       |    AS anomalous
       |FROM l ORDER BY janela_ms, event_type""".stripMargin
 
-  /** SQ24: STREAMING DISTINCT-USER MONITOR — per closed hourly window
-    * × event type: exact row count plus an HLL distinct-user estimate
-    * computed IN-STREAM (`approx_count_distinct` partial-merges
-    * inside the watermarked windowed aggregation, so each open
-    * (window, type) cell holds CONSTANT state — a few KB of HLL
-    * registers — where exact distinct would buffer every user id per
-    * open window; the only way "distinct users per window" streams at
-    * 100 TB). The emitted row certifies the estimate with the
-    * q52/q135 free invariants — au ≥ 1 when the cell has rows, au ≤
-    * n·(1 + k·rsd) with k/rsd the shared [[graft.queries.Queries]]
-    * constants — and ships (window, type, n, boolean certificate):
-    * HLL register contents are engine-specific, so the BOOLEAN is the
-    * cross-engine surface (the q52 above-gate convention) while the
-    * oracle pins the exact n per closed window and the closure rule
-    * itself. */
   /** q244: STATE-STORE INTROSPECTION (Spark 4's `statestore` batch
     * data source) — the checkpoint-forensics read a streaming team
     * runs when a query misbehaves: run the hourly windowed count to
@@ -2320,10 +2120,24 @@ object StreamOps {
       |GROUP BY 1, 2
       |ORDER BY janela_ms, event_type""".stripMargin
 
-  def sq24StreamDistinct(s: SparkSession, dir: String): DataFrame = {
-    val name = s"sq24_${System.nanoTime()}"
-    withStreamShuffle(s, WideStatePartitions) { fs =>
-      val q = eventsStream(fs, dir)
+  /** SQ24: STREAMING DISTINCT-USER MONITOR — per closed hourly window
+    * × event type: exact row count plus an HLL distinct-user estimate
+    * computed IN-STREAM (`approx_count_distinct` partial-merges
+    * inside the watermarked windowed aggregation, so each open
+    * (window, type) cell holds CONSTANT state — a few KB of HLL
+    * registers — where exact distinct would buffer every user id per
+    * open window; the only way "distinct users per window" streams at
+    * 100 TB). The emitted row certifies the estimate with the
+    * q52/q135 free invariants — au ≥ 1 when the cell has rows, au ≤
+    * n·(1 + k·rsd) with k/rsd the shared [[graft.queries.Queries]]
+    * constants — and ships (window, type, n, boolean certificate):
+    * HLL register contents are engine-specific, so the BOOLEAN is the
+    * cross-engine surface (the q52 above-gate convention) while the
+    * oracle pins the exact n per closed window and the closure rule
+    * itself. */
+  def sq24StreamDistinct(s: SparkSession, dir: String): DataFrame =
+    drainToMemory(s, "sq24_stream_distinct", "append", WideStatePartitions) { fs =>
+      eventsStream(fs, dir)
         .withWatermark("ts", "2 hours")
         .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
         .agg(count(lit(1)).as("n"),
@@ -2331,19 +2145,12 @@ object StreamOps {
             .as("au"))
         .select(unix_millis(col("w.start")).as("janela_ms"),
           col("event_type"), col("n"), col("au"))
-        .writeStream.queryName(name).format("memory")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      recordStatePeak("sq24_stream_distinct", q)
-      fs.table(name)
-        .select(col("event_type"), col("janela_ms"), col("n"),
-          ((col("au") >= when(col("n") > 0, 1L).otherwise(0L)) &&
-            (col("au") <= lit(1.0 + graft.queries.Queries.HllUpperK *
-              graft.queries.Queries.HllRsd) * col("n")))
-            .as("users_within_bounds"))
-        .orderBy("janela_ms", "event_type")
-    }
-  }
+    }.select(col("event_type"), col("janela_ms"), col("n"),
+        ((col("au") >= when(col("n") > 0, 1L).otherwise(0L)) &&
+          (col("au") <= lit(1.0 + graft.queries.Queries.HllUpperK *
+            graft.queries.Queries.HllRsd) * col("n")))
+          .as("users_within_bounds"))
+      .orderBy("janela_ms", "event_type")
 
   /** SQ25: NATIVE SESSION WINDOWS — the `session_window(ts, gap)`
     * Catalyst aggregation (dynamic-gap session state merged by the
@@ -2361,23 +2168,16 @@ object StreamOps {
     * session) where the q22 lag-rule splits strictly greater; the
     * emitted end is last-event + gap. State = OPEN sessions only
     * (watermark-bounded — the saturating family). */
-  def sq25SessionWindow(s: SparkSession, dir: String): DataFrame = {
-    val name = s"sq25_${System.nanoTime()}"
-    withStreamShuffle(s) { fs =>
-      val q = eventsStream(fs, dir)
+  def sq25SessionWindow(s: SparkSession, dir: String): DataFrame =
+    drainToMemory(s, "sq25_session_window", "append") { fs =>
+      eventsStream(fs, dir)
         .withWatermark("ts", "2 hours")
         .groupBy(session_window(col("ts"), "30 minutes").as("sw"),
           col("user_id"))
         .agg(count(lit(1)).as("n_eventos"))
         .select(col("user_id"), unix_micros(col("sw.start")).as("inicio_us"),
           unix_micros(col("sw.end")).as("fim_us"), col("n_eventos"))
-        .writeStream.queryName(name).format("memory")
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      recordStatePeak("sq25_session_window", q)
-      fs.table(name).orderBy("user_id", "inicio_us")
-    }
-  }
+    }.orderBy("user_id", "inicio_us")
 
   /** SQ25's DuckDB oracle: the gap chain with session_window's OWN
     * split rule (>= gap) and emitted end (last + gap), closed under

@@ -251,6 +251,54 @@ class StreamOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       "post-recovery profiles must equal the batch profile over the full input")
   }
 
+  /** The checkpoint dir the runner's fork points its query at. */
+  private def ckptOf(fs: SparkSession): Option[String] =
+    fs.conf.getOption("spark.sql.streaming.checkpointLocation")
+
+  /** Names of the per-run checkpoint dirs under CkptBase. */
+  private def runDirs(base: String): Set[String] =
+    Option(new java.io.File(base).listFiles()).toSeq.flatten
+      .map(_.getName).filter(_.startsWith("run_")).toSet
+
+  /** The run's checkpoint dir sat under CkptBase and is gone, and no
+    * other `run_*` dir appeared; nothing to check without a CkptBase. */
+  private def assertCkptRemoved(before: Option[Set[String]], ckpt: Option[String]): Unit =
+    StreamOps.CkptBase.foreach { base =>
+      assert(ckpt.exists(_.startsWith(base)), s"run checkpoint $ckpt not under $base")
+      assert(!new java.io.File(ckpt.get).exists(), s"${ckpt.get} left behind")
+      assert(runDirs(base) -- before.get == Set.empty)
+    }
+
+  test("drainToMemory: drains, records the family's state peak, removes its checkpoint dir") {
+    val before = StreamOps.CkptBase.map(runDirs)
+    var ckpt: Option[String] = None
+    val got = StreamOps.drainToMemory(spark, "runner_spec_ok", "complete") { fs =>
+      ckpt = ckptOf(fs)
+      StreamOps.eventsStream(fs, dir).groupBy("event_type").count()
+    }.collect().toSet
+    val want = StreamOps.eventsBatch(spark, dir).groupBy("event_type").count().collect().toSet
+    assert(got.nonEmpty && got == want)
+    assert(StreamOps.lastStatePeak("runner_spec_ok").contains(want.size.toLong))
+    assertCkptRemoved(before, ckpt)
+  }
+
+  test("drainToMemory: an execution-time failure propagates and leaves no checkpoint dir") {
+    val before = StreamOps.CkptBase.map(runDirs)
+    var ckpt: Option[String] = None
+    val e = intercept[Exception] {
+      StreamOps.drainToMemory(spark, "runner_spec_fail", "append") { fs =>
+        ckpt = ckptOf(fs)
+        StreamOps.eventsStream(fs, dir).select(col("event_id"),
+          when(col("event_id") >= 0, raise_error(lit("runner spec failure"))).as("x"))
+      }
+    }
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+    assert(causes.exists(t => Option(t.getMessage).exists(_.contains("runner spec failure"))),
+      s"the row's error must propagate, got: $e")
+    assert(StreamOps.lastStatePeak("runner_spec_fail").isEmpty)
+    assertCkptRemoved(before, ckpt)
+  }
+
   test("streaming metrics with idle-stop match batch counters") {
     import graft.model.SchemaDef
     val fixture = graft.sources.GenFixtures.MessagesPath
