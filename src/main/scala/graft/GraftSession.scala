@@ -40,13 +40,26 @@ object GraftSession {
     envPositiveInt("SPARK_GRAFT_CPUS")
       .getOrElse(Runtime.getRuntime.availableProcessors())
 
-  /** A positive-int knob: `None` when unset; any other value that is
-    * not a positive integer (surrounding blanks allowed) fails fast
-    * with an error naming the knob, instead of falling back silently
-    * or surfacing as a bare `NumberFormatException`. */
+  /** A knob's value: `None` when unset; a value that `parse` rejects
+    * (after trimming surrounding blanks) fails fast with an error naming
+    * the knob, instead of falling back silently or surfacing as a bare
+    * `NumberFormatException`. */
+  private def knob[T](name: String, raw: Option[String], kind: String)(
+      parse: String => Option[T]): Option[T] =
+    raw.map(v => parse(v.trim).getOrElse(
+      throw new IllegalArgumentException(s"$name='$v' is not $kind")))
+
   def positiveInt(name: String, raw: Option[String]): Option[Int] =
-    raw.map(v => v.trim.toIntOption.filter(_ >= 1).getOrElse(
-      throw new IllegalArgumentException(s"$name='$v' is not a positive int")))
+    knob(name, raw, "a positive int")(_.toIntOption.filter(_ >= 1))
+
+  def positiveLong(name: String, raw: Option[String]): Option[Long] =
+    knob(name, raw, "a positive long")(_.toLongOption.filter(_ >= 1))
+
+  def nonNegativeLong(name: String, raw: Option[String]): Option[Long] =
+    knob(name, raw, "a non-negative long")(_.toLongOption.filter(_ >= 0))
+
+  def long(name: String, raw: Option[String]): Option[Long] =
+    knob(name, raw, "a long")(_.toLongOption)
 
   def envPositiveInt(name: String): Option[Int] = positiveInt(name, sys.env.get(name))
 

@@ -5,7 +5,7 @@ import graft.model.{EngineConf, SchemaDef}
 import graft.operators.Metrics
 import graft.sources.Generator
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 
 /** CLI entry — the Spark re-expression of the reference's dispatcher
   * (reference: AplicacaoPrincipal.java:21-59: env TIPO_APLICACAO
@@ -32,23 +32,10 @@ object Main {
     }
     val (mode, dir) = (args(0).toUpperCase, args(1))
     val conf = EngineConf.fromEnv()
+    val every = progressEvery()
     val spark = GraftSession.getOrCreate(s"graft-$mode")
-    // O22: running progress at the reference's 100k cadence
-    // (overridable via GRAFT_PROGRESS_EVERY), covering every action
-    // the pipeline runs
-    // defensive parse: a non-numeric or non-positive override falls
-    // back to the default cadence with a warning instead of crashing
-    // before mode dispatch
-    val every = sys.env.get("GRAFT_PROGRESS_EVERY")
-      .flatMap { v =>
-        val parsed = scala.util.Try(v.trim.toLong).toOption.filter(_ > 0)
-        if (parsed.isEmpty)
-          System.err.println(s"GRAFT_PROGRESS_EVERY inválido ('$v'); usando padrão")
-        parsed
-      }
-      .getOrElse(graft.operators.ProgressTicker.IntervaloLog)
     try graft.operators.ProgressTicker.withTicker(spark, every) {
-      val report = mode match {
+      val pending = mode match {
         case "PRODUTOR_AVRO"   => produce(spark, conf, dir, avro = true)
         case "PRODUTOR_JSON"   => produce(spark, conf, dir, avro = false)
         case "CONSUMIDOR_AVRO" => consume(spark, conf, dir, avro = true)
@@ -57,6 +44,10 @@ object Main {
           System.err.println(s"tipo de aplicação desconhecido: $other")
           sys.exit(2); null
       }
+      // evaluated once: every sink below reads this local copy instead
+      // of re-running the pipeline behind the report
+      val report = spark.createDataFrame(
+        java.util.List.of(pending.collect(): _*), pending.schema)
       // console report + JSON report sink, the O21 analogue
       report.show(truncate = false)
       report.coalesce(1).write.mode("overwrite").json(s"$dir/relatorio-$mode")
@@ -70,6 +61,13 @@ object Main {
       }
     } finally spark.stop()
   }
+
+  /** O22: running progress at the reference's 100k cadence, covering
+    * every action the pipeline runs; GRAFT_PROGRESS_EVERY overrides it
+    * and fails fast, naming the variable, unless it is a positive long. */
+  def progressEvery(env: Map[String, String] = sys.env): Long =
+    GraftSession.positiveLong("GRAFT_PROGRESS_EVERY", env.get("GRAFT_PROGRESS_EVERY"))
+      .getOrElse(graft.operators.ProgressTicker.IntervaloLog)
 
   /** Generate + serialize + partitioned write (reference produce path,
     * ProdutorAvro.java:55-105 / ProdutorJson.java:45-95). The explicit
@@ -114,17 +112,19 @@ object Main {
         // COMPRESSION_TYPE maps onto the file codec (the reference's
         // producer compression axis — ConfiguracaoKafka.java:112-118;
         // parquet accepts the same names: none/lz4/snappy/gzip/zstd)
-        raw.repartition(conf.numParticoes, col("particao"))
+        // The report's aggregates are observed on the written rows
+        // during the write, as the producer callback counts sent-record
+        // sizes inside its send loop: generate, serialize, write and
+        // count are one pass, and the report is a local frame.
+        val obs = Observation()
+        val aggs = Metrics.reportAggs(octet_length(col("valor")).cast("long"),
+          col("sucesso"), col("timestamp"), counted = col("sequencia") > conf.warmupMensagens)
+        raw.observe(obs, aggs.head, aggs.tail: _*)
+          .repartition(conf.numParticoes, col("particao"))
           .write.mode("overwrite").partitionBy("particao")
           .option("compression", conf.compressionType.toLowerCase)
           .parquet(s"$dir/messages_raw_$fmt")
-        // metrics over what was actually written (the producer callback
-        // counts sent-record sizes) — generate+serialize runs ONCE, in the
-        // write above; the report only re-reads lengths
-        val written = spark.read.parquet(s"$dir/messages_raw_$fmt")
-        Metrics.report(
-          written.filter(col("sequencia") > conf.warmupMensagens),
-          octet_length(col("valor")).cast("long"), col("sucesso"), col("timestamp"), conf)
+        Metrics.observedReport(spark, obs, conf)
     }
   }
 
@@ -144,7 +144,8 @@ object Main {
         graft.sources.KafkaIO.fromSourceFrame(
           graft.sources.KafkaIO.readAll(spark, brokers,
             graft.sources.KafkaIO.topicoMensagens(avro)))
-      case None => spark.read.parquet(s"$dir/messages_raw_$fmt")
+      // the schema produce writes, so the scan infers nothing
+      case None => spark.read.schema(SchemaDef.topicType(avro)).parquet(s"$dir/messages_raw_$fmt")
     }
     // live Avro values carry the 5-byte Confluent wire header the
     // producer framed (see produce): strip it before decode — the

@@ -73,21 +73,25 @@ final case class EngineConf(
 }
 
 object EngineConf {
-  /** Read from env with the reference's names/defaults. */
+  /** Read from env with the reference's names/defaults. A malformed
+    * number fails fast naming its variable (GraftSession's parser):
+    * counts and sizes must be positive, the warm-up may be 0 and the
+    * seed may be any long. */
   def fromEnv(env: Map[String, String] = sys.env): EngineConf = {
-    def l(k: String, d: Long) = env.get(k).map(_.trim.toLong).getOrElse(d)
-    def i(k: String, d: Int)  = env.get(k).map(_.trim.toInt).getOrElse(d)
+    import graft.GraftSession.{long, nonNegativeLong, positiveInt, positiveLong}
+    def num[T](parse: (String, Option[String]) => Option[T])(k: String, d: T): T =
+      parse(k, env.get(k)).getOrElse(d)
     def s(k: String, d: String) = env.getOrElse(k, d)
-    val parts = i("NUM_PARTICOES", 18)
+    val parts = num(positiveInt)("NUM_PARTICOES", 18)
     EngineConf(
-      totalMensagens    = l("TOTAL_MENSAGENS", 10_000_000L),
-      tamanhoMensagemKB = i("TAMANHO_MENSAGEM_KB", 2048),
+      totalMensagens    = num(positiveLong)("TOTAL_MENSAGENS", 10_000_000L),
+      tamanhoMensagemKB = num(positiveInt)("TAMANHO_MENSAGEM_KB", 2048),
       numParticoes      = parts,
-      consumerThreads   = i("CONSUMER_THREADS", parts),
+      consumerThreads   = num(positiveInt)("CONSUMER_THREADS", parts),
       benchMode         = s("BENCH_MODE", "E2E_PARSE"),
       compressionType   = s("COMPRESSION_TYPE", "lz4"),
-      warmupMensagens   = l("WARMUP_MENSAGENS", 0L),
-      seed              = l("GRAFT_SEED", 42L)
+      warmupMensagens   = num(nonNegativeLong)("WARMUP_MENSAGENS", 0L),
+      seed              = num(long)("GRAFT_SEED", 42L)
     )
   }
 }
@@ -136,6 +140,23 @@ object SchemaDef {
       |    {"name": "versao", "type": "string", "default": "1.0"}
       |  ]
       |}""".stripMargin
+
+  /** Schema of an offline topic, the parquet dir `messages_raw_<fmt>`
+    * that produce writes: the record columns, `valor` (binary Avro or
+    * JSON text), then the `particao` directory column. Every field
+    * reads back nullable, as Spark reads any file source. */
+  private def topic(valor: DataType): StructType = StructType(Seq(
+    StructField("chave", StringType),
+    StructField("sequencia", LongType),
+    StructField("timestamp", LongType),
+    StructField("sucesso", BooleanType),
+    StructField("valor", valor),
+    StructField("particao", IntegerType)))
+
+  val topicAvroType: StructType = topic(BinaryType)
+  val topicJsonType: StructType = topic(StringType)
+
+  def topicType(avro: Boolean): StructType = if (avro) topicAvroType else topicJsonType
 
   /** Envelope (Kafka-record analogue) around the payload, as stored in
     * the `messages` fixture table: chave/particao per

@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.model.EngineConf
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 
 /** The reference's core "query": the streaming metrics accumulator and
   * its derived report (reference: util/MetricasDesempenho.java:29-105),
@@ -21,12 +21,25 @@ import org.apache.spark.sql.{Column, DataFrame, Observation}
 object Metrics {
 
   /** Counter aggregation columns (the `registrarMensagem` semantics:
-    * bytes only added when > 0). */
-  def counterAggs(bytes: Column, sucesso: Column): Seq[Column] = Seq(
-    count(lit(1)).as("totalMensagens"),
-    coalesce(sum(when(sucesso, 1L).otherwise(0L)), lit(0L)).as("mensagensSucesso"),
-    coalesce(sum(when(sucesso, 0L).otherwise(1L)), lit(0L)).as("mensagensComErro"),
-    coalesce(sum(when(bytes > 0, bytes).otherwise(0L)), lit(0L)).as("totalBytes"))
+    * bytes only added when > 0) over the rows where `counted` holds —
+    * every row by default, where Catalyst folds the condition away. */
+  def counterAggs(bytes: Column, sucesso: Column, counted: Column = lit(true)): Seq[Column] = {
+    def sumIf(v: Column) = coalesce(sum(when(counted, v).otherwise(0L)), lit(0L))
+    Seq(
+      count(when(counted, 1)).as("totalMensagens"),
+      sumIf(when(sucesso, 1L).otherwise(0L)).as("mensagensSucesso"),
+      sumIf(when(sucesso, 0L).otherwise(1L)).as("mensagensComErro"),
+      sumIf(when(bytes > 0, bytes).otherwise(0L)).as("totalBytes"))
+  }
+
+  /** The report's aggregates: the four counters plus the first and last
+    * event timestamps, over the rows where `counted` holds. [[format]]
+    * turns their one-row result into the report. */
+  def reportAggs(bytes: Column, sucesso: Column, ts: Column,
+                 counted: Column = lit(true)): Seq[Column] =
+    counterAggs(bytes, sucesso, counted) ++ Seq(
+      coalesce(min(when(counted, ts)), lit(0L)).as("timestampInicio"),
+      coalesce(max(when(counted, ts)), lit(0L)).as("timestampFim"))
 
   /** Derived-metric columns over the four counters + duration.
     * Formulas and zero-guards per MetricasDesempenho.java:45-72:
@@ -61,10 +74,14 @@ object Metrics {
     */
   def report(df: DataFrame, bytes: Column, sucesso: Column, ts: Column,
              conf: EngineConf = EngineConf()): DataFrame = {
-    val aggs = counterAggs(bytes, sucesso) ++ Seq(
-      coalesce(min(ts), lit(0L)).as("timestampInicio"),
-      coalesce(max(ts), lit(0L)).as("timestampFim"))
-    val counters = df.agg(aggs.head, aggs.tail: _*)
+    val aggs = reportAggs(bytes, sucesso, ts)
+    format(df.agg(aggs.head, aggs.tail: _*), conf)
+  }
+
+  /** The report over `counters`, one row holding the [[reportAggs]]
+    * columns — an aggregation, or a local frame built from an
+    * observation (see [[graft.Main.produce]]). */
+  def format(counters: DataFrame, conf: EngineConf): DataFrame = {
     val dur = col("timestampFim") - col("timestampInicio")
     counters
       .select((col("*") +: derivedCols(dur)): _*)
@@ -117,6 +134,14 @@ object Metrics {
       org.apache.spark.sql.Encoders.product[Counters]
     override def outputEncoder: org.apache.spark.sql.Encoder[Counters] =
       org.apache.spark.sql.Encoders.product[Counters]
+  }
+
+  /** The report of a completed write that observed [[reportAggs]] in
+    * `obs`: a one-row local frame (a `LocalRelation`), so collecting
+    * it starts no Spark job. */
+  def observedReport(spark: SparkSession, obs: Observation, conf: EngineConf): DataFrame = {
+    val row = scala.concurrent.Await.result(obs.future, scala.concurrent.duration.Duration.Inf)
+    format(spark.createDataFrame(java.util.List.of(row), row.schema), conf)
   }
 
   /** Single-pass variant: attach the counters as an `Observation` so a
